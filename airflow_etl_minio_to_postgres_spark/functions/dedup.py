@@ -12,6 +12,12 @@ Scale design (the whole point of these shapes):
   Jaccard verification.  Complexity O(docs x bands + collisions), not
   O(docs^2).
 * **SimHash** is one explode + two aggregations — all JVM expressions.
+* **One band self-join**: every banded pair path of the JVM families
+  (MinHash, SimHash, aHash, record-linkage blocking, the streaming
+  intra-batch screen) gets its candidates from :func:`banded_pairs` —
+  the band-key self-join, ``id_a < id_b`` and the first-matching-band
+  rule that makes each pair unique without a distinct exchange.  Each
+  caller supplies only its band fan and its exact verifier.
 
 Determinism/oracle note: the per-seed min-hash is the *lexicographic min of
 sha256 hex strings* over the shingle set.  A hex-string min is a valid
@@ -20,6 +26,8 @@ sha256, which is what makes the DuckDB oracle possible.
 """
 
 from __future__ import annotations
+
+from typing import Callable
 
 from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame
@@ -257,8 +265,11 @@ def near_dup_pairs(
     Returns (id_a, id_b, jaccard) with ``id_a < id_b`` and
     ``jaccard >= threshold``.  The only shuffles are the minhash
     aggregations, the band-key equi-join and the verification joins —
-    never an all-pairs product (candidates are unique by first-matching-
-    band construction, so no distinct exchange either).  Docs shorter
+    never an all-pairs product.  Candidates come from
+    :func:`banded_pairs` (unique by its first-matching-band rule, so no
+    distinct exchange either); candidates and Jaccard verifier are
+    shared with the streaming near-dup screen
+    (:func:`_minhash_verified_pairs`).  Docs shorter
     than the shingle width are excluded
     (they have no signature; degenerate all-null band keys would otherwise
     collide with each other).
@@ -276,64 +287,77 @@ def near_dup_pairs(
     base = _persist_tracked(
         _minhash_table(df, text_col, id_col, num_hashes, shingle_k)
     )
-    banded = base.select(
+    return _minhash_verified_pairs(
+        _minhash_band_fan(base, id_col, num_bands, rows_per_band),
+        base.select(id_col, "shingles"),
+        id_col,
+        num_bands,
+        threshold,
+    )
+
+
+def _minhash_band_fan(
+    sig: DataFrame,
+    id_col: str,
+    num_bands: int,
+    rows_per_band: int,
+    *keep: str,
+) -> DataFrame:
+    """The MinHash band fan: one row per (doc, band) of a signature
+    table ``(id_col, minhash, ...)`` — ``id_col``, the ``keep``
+    columns, the doc's whole band-key array ``_bks`` (what the first-
+    match rule compares), ``_band`` and ``band_key``.  The one place
+    band keys are cut from a minhash signature, so the batch operator,
+    the streaming screen and the store migration key bands
+    identically."""
+    return sig.select(
         F.col(id_col),
+        *keep,
         band_keys_expr(F.col("minhash"), num_bands, rows_per_band).alias(
             "_bks"
         ),
     ).select(
         F.col(id_col),
+        *keep,
         "_bks",
         F.posexplode("_bks").alias("_band", "band_key"),
     )
-    # First-match banding: emit a candidate ONLY from the lowest band
-    # whose keys match (every prior band's key must differ).  One row
-    # per (doc, band) per side and exactly one first-matching band make
-    # the candidate set unique by construction — the dropDuplicates
-    # exchange over the m^2-per-hot-bucket candidate set disappears for
-    # the price of a few string compares on the band-key arrays the
-    # sides now carry.  Result set identical: later-band copies of a
-    # pair are exactly the rows dropDuplicates used to discard.
-    first_match = None
-    for b_prior in range(num_bands - 1):
-        cond = (F.col("_band") <= F.lit(b_prior)) | (
-            F.element_at(F.col("_bks_a"), b_prior + 1)
-            != F.element_at(F.col("_bks_b"), b_prior + 1)
-        )
-        first_match = cond if first_match is None else first_match & cond
-    pairs = (
-        banded.select(
-            F.col(id_col).alias("id_a"),
-            F.col("_bks").alias("_bks_a"),
-            "_band",
-            "band_key",
-        )
-        .join(
-            banded.select(
-                F.col(id_col).alias("id_b"),
-                F.col("_bks").alias("_bks_b"),
-                "band_key",
-            ),
-            "band_key",
-        )
-        .where(F.col("id_a") < F.col("id_b"))
-        .where(first_match)
-        .select("id_a", "id_b")
-    )
-    sets = base.select(id_col, "shingles")
-    with_sets = (
-        pairs.join(
-            sets.select(
-                F.col(id_col).alias("id_a"), F.col("shingles").alias("sh_a")
-            ),
-            "id_a",
-        )
-        .join(
-            sets.select(
-                F.col(id_col).alias("id_b"), F.col("shingles").alias("sh_b")
-            ),
-            "id_b",
-        )
+
+
+def _minhash_verified_pairs(
+    fan: DataFrame,
+    sets: DataFrame,
+    id_col: str,
+    num_bands: int,
+    threshold: float,
+    max_bucket_size: int | None = None,
+) -> DataFrame:
+    """(id_a, id_b, jaccard) of a :func:`_minhash_band_fan`, shared by
+    :func:`near_dup_pairs` and the streaming near-dup screen.
+    Candidates come from :func:`banded_pairs` — band ``b`` differs when
+    the two docs' ``_bks`` keys at ``b`` differ (``concat_ws``-built
+    strings, never NULL, so ``!=`` is exact); the exact verifier joins
+    both ids' shingle sets from ``sets`` (``id_col``, ``shingles``)
+    and drops pairs below ``threshold``."""
+    pairs = banded_pairs(
+        fan,
+        id_col,
+        ["_bks"],
+        lambda b: F.element_at(F.col("_bks_a"), b + 1)
+        != F.element_at(F.col("_bks_b"), b + 1),
+        num_bands,
+        max_bucket_size,
+    ).select("id_a", "id_b")
+    with_sets = pairs.join(
+        sets.select(
+            F.col(id_col).alias("id_a"), F.col("shingles").alias("sh_a")
+        ),
+        "id_a",
+    ).join(
+        sets.select(
+            F.col(id_col).alias("id_b"), F.col("shingles").alias("sh_b")
+        ),
+        "id_b",
     )
     return (
         with_sets.withColumn(
@@ -921,9 +945,8 @@ def salted_band_sides(
     max_bucket_size: int | None = None,
 ) -> tuple[DataFrame, DataFrame, list[str]]:
     """Self-join sides over a banded signature fan-out, with hot band
-    buckets split across salted sub-groups — the shared skew mechanism
-    of the banded dedup family (SimHash, aHash; any (id, band_key)
-    candidate generator).
+    buckets split across salted sub-groups — the skew mechanism of
+    :func:`banded_pairs`, which every banded pair path goes through.
 
     A band-key self-join puts a bucket of ``m`` rows into ONE hash-join
     group: ``m^2`` candidate comparisons on a single task.  Low-entropy
@@ -985,13 +1008,70 @@ def salted_band_sides(
     return a_fan, b_fan, [key, "_salt"]
 
 
+def banded_pairs(
+    fan: DataFrame,
+    id_col: str,
+    carry: list[str],
+    band_differs: Callable[[int], Column] | None,
+    n_bands: int,
+    max_bucket_size: int | None = None,
+) -> DataFrame:
+    """THE band self-join of the banded pair family: unique candidate
+    pairs of a band fan, before any exact verification.
+
+    ``fan`` has one row per (doc, band): ``id_col``, ``band_key`` (keys
+    embed the band index, so equal keys mean the same band), ``_band``
+    (the band index; needed only when ``n_bands > 1``) and the
+    ``carry`` columns.  The two sides come from
+    :func:`salted_band_sides` (``max_bucket_size`` splits hot buckets,
+    bit-identically) and join on the band key; a row is kept when
+    ``id_a < id_b`` and it passes the FIRST-MATCH rule — for every band
+    ``b' < _band``, ``band_differs(b')`` holds.  ``band_differs(b')``
+    builds a Column over the carried ``<col>_a`` / ``<col>_b`` values
+    that is true exactly when the two docs' band-``b'`` keys differ.
+    With one row per (doc, band) per side, a pair that shares several
+    bands then comes out once, from its lowest shared band — no
+    distinct exchange over the m^2-per-hot-bucket candidate set.
+
+    Returns ``id_a``, ``id_b`` and each carried column as
+    ``<col>_a`` / ``<col>_b``.  One band (``n_bands == 1``, e.g.
+    record-linkage blocking) has no rule to apply, and
+    ``band_differs`` may be None."""
+    a_fan, b_fan, keys = salted_band_sides(
+        fan, id_col, "band_key", max_bucket_size
+    )
+    band = ["_band"] if n_bands > 1 else []
+    a = a_fan.select(
+        F.col(id_col).alias("id_a"),
+        *[F.col(c).alias(f"{c}_a") for c in carry],
+        *band,
+        *keys,
+    )
+    b = b_fan.select(
+        F.col(id_col).alias("id_b"),
+        *[F.col(c).alias(f"{c}_b") for c in carry],
+        *keys,
+    )
+    pairs = a.join(b, keys).where(F.col("id_a") < F.col("id_b"))
+    for b_prior in range(n_bands - 1):
+        pairs = pairs.where(
+            (F.col("_band") <= F.lit(b_prior)) | band_differs(b_prior)
+        )
+    return pairs.select(
+        "id_a",
+        "id_b",
+        *[f"{c}_{side}" for c in carry for side in ("a", "b")],
+    )
+
+
 def salted_join_sides(
     left: DataFrame,
     right: DataFrame,
     left_id: str,
     key: str = "band_key",
     max_bucket_size: int | None = None,
-    right_id: str | None = None,
+    *,
+    right_id: str,
 ) -> tuple[DataFrame, DataFrame, list[str]]:
     """Two-frame generalization of :func:`salted_band_sides`: join
     sides for ``left JOIN right ON key`` with hot key buckets split
@@ -1002,27 +1082,16 @@ def salted_join_sides(
     A bucket shared by ``l`` left rows and ``r`` right rows does
     ``l * r`` comparisons in ONE hash-join group.  With
     ``max_bucket_size`` set, hot buckets (``max(l, r) > cap``) split:
-    one side is SALTED into ``n_salt`` sub-groups by
-    ``pmod(xxhash64(id), n_salt)`` and the other side is REPLICATED
-    into every sub-group.  EXACT: every (left row, right row) pair of
-    a bucket meets in exactly one sub-group (the salted row's), so
-    downstream dropDuplicates / first-match logic behaves identically
-    and results are bit-identical to the unsalted join.
-
-    Which side salts depends on ``right_id``:
-
-    * ``right_id=None`` (legacy): the LEFT side always salts, with
-      ``n_salt = min(ceil(max(l, r)/cap), l)``.  LIMITATION: the salt
-      key is the left id, so a bucket hot only on the RIGHT (few batch
-      rows vs a huge store bucket) cannot split below ``r`` comparisons
-      per task — ``n_salt`` is capped at ``l``, and per-task work is
-      ``~l/n_salt * r``, not ``~cap * min(l, r)``.
-    * ``right_id`` given: hot buckets salt their LARGER side
-      (per-bucket ``_swap`` flag, ``n_salt = ceil(max(l, r)/cap)``)
-      and replicate the smaller — per-task work is ``~cap * min(l, r)``
-      for EVERY hot shape, including right-heavy ones.  Both fan-outs
-      gain a one-element-or-sequence array explode (one extra Generate
-      node on cold rows vs the legacy scalar salt).
+    the LARGER side of each bucket (per-bucket ``_swap`` flag; ids
+    ``left_id`` / ``right_id``) is SALTED into
+    ``n_salt = ceil(max(l, r)/cap)`` sub-groups by
+    ``pmod(xxhash64(id), n_salt)`` and the smaller side is REPLICATED
+    into every sub-group, so per-task work is ``~cap * min(l, r)`` for
+    every hot shape, right-heavy ones included.  EXACT: every
+    (left row, right row) pair of a bucket meets in exactly one
+    sub-group (the salted row's), so downstream dropDuplicates logic
+    behaves identically and results are bit-identical to the unsalted
+    join.
 
     The hot directory is built from BOTH sides' bucket counts (two
     map-side-combined aggregates over the fan-outs, inner-joined —
@@ -1041,41 +1110,9 @@ def salted_join_sides(
     right = _persist_tracked(right)
     lc = left.groupBy(key).agg(F.count(F.lit(1)).alias("_lc"))
     rc = right.groupBy(key).agg(F.count(F.lit(1)).alias("_rc"))
-    hot_base = lc.join(rc, key).where(
+    hot = lc.join(rc, key).where(
         F.greatest(F.col("_lc"), F.col("_rc")) > cap
-    )
-    if right_id is None:
-        hot = hot_base.select(
-            key,
-            F.least(
-                F.ceil(
-                    F.greatest(F.col("_lc"), F.col("_rc")) / F.lit(cap)
-                ),
-                F.col("_lc"),
-            ).cast("int").alias("_ns"),
-        )
-        l_out = (
-            left.join(F.broadcast(hot), key, "left")
-            .withColumn("_ns", F.coalesce(F.col("_ns"), F.lit(1)))
-            .withColumn(
-                "_salt",
-                F.pmod(F.xxhash64(F.col(left_id)), F.col("_ns")).cast(
-                    "int"
-                ),
-            )
-            .drop("_ns")
-        )
-        r_out = (
-            right.join(F.broadcast(hot), key, "left")
-            .withColumn("_ns", F.coalesce(F.col("_ns"), F.lit(1)))
-            .withColumn(
-                "_salt", F.explode(F.sequence(F.lit(0), F.col("_ns") - 1))
-            )
-            .drop("_ns")
-        )
-        return l_out, r_out, [key, "_salt"]
-
-    hot = hot_base.select(
+    ).select(
         key,
         F.ceil(F.greatest(F.col("_lc"), F.col("_rc")) / F.lit(cap))
         .cast("int")
@@ -1190,7 +1227,9 @@ def simhash_near_dup_pairs(
     (id_a, id_b, hamming) with ``id_a < id_b`` and
     ``hamming <= max_hamming``.
 
-    ``max_bucket_size`` bounds hot-band-bucket skew via
+    Candidates come from :func:`banded_pairs` (first match on the
+    carried signatures' chunks); Hamming distance is the exact
+    verifier.  ``max_bucket_size`` bounds hot-band-bucket skew via
     :func:`salted_band_sides` (exact — results are bit-identical to the
     unsalted plan; only task-level work distribution changes).
     """
@@ -1216,50 +1255,24 @@ def simhash_near_dup_pairs(
             )
         ).alias("_band", "band_key"),
     )
-    a_fan, b_fan, join_keys = salted_band_sides(
-        banded, id_col, "band_key", max_bucket_size
-    )
 
     def chunk(col: str, b: int) -> Column:
         return F.expr(f"shiftright({col}, {b * chunk_bits}) & {mask}")
 
-    # First-match banding: emit a pair ONLY from the lowest band whose
-    # chunks match — every band-b' < b chunk must differ.  A candidate
-    # pair is then unique by construction (one row per (doc, band) on
-    # each side, and exactly one band can be the first match), which
-    # deletes the dropDuplicates exchange that used to reshuffle the
-    # full m^2-per-hot-bucket candidate set; the replacement is a few
-    # shift-and-compare ops per candidate row on sigs the join already
-    # carries.  Result set identical: duplicates never had distinct
-    # (sig_a, sig_b), so dropping later copies == never emitting them.
-    first_match = None
-    for b_prior in range(SIMHASH_BANDS - 1):
-        cond = (F.col("_band") <= F.lit(b_prior)) | (
-            chunk("sig_a", b_prior) != chunk("sig_b", b_prior)
-        )
-        first_match = cond if first_match is None else first_match & cond
-    pairs = (
-        a_fan.select(
-            F.col(id_col).alias("id_a"),
-            F.col("simhash").alias("sig_a"),
-            "_band",
-            *join_keys,
-        )
-        .join(
-            b_fan.select(
-                F.col(id_col).alias("id_b"),
-                F.col("simhash").alias("sig_b"),
-                *join_keys,
-            ),
-            join_keys,
-        )
-        .where(F.col("id_a") < F.col("id_b"))
-        .where(first_match)
-        .select("id_a", "id_b", "sig_a", "sig_b")
+    # first-match rule: band b' differs when the two signatures' b'
+    # chunks differ — a few shift-and-compare ops on the carried sigs
+    pairs = banded_pairs(
+        banded,
+        id_col,
+        ["simhash"],
+        lambda b: chunk("simhash_a", b) != chunk("simhash_b", b),
+        SIMHASH_BANDS,
+        max_bucket_size,
     )
     return (
         pairs.withColumn(
-            "hamming", F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b")))
+            "hamming",
+            F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b"))),
         )
         .where(F.col("hamming") <= max_hamming)
         .select("id_a", "id_b", "hamming")

@@ -12,11 +12,11 @@ Zingg):
    ONLY within equal-valued blocks (a hash-partitioned equi-self-join —
    one shuffle on the block key, never an all-pairs product).  The
    100 TB contract is the same as the MinHash band join in
-   ``functions/dedup.py``: per-block candidate count is the unit of
-   cost, so block keys are chosen to keep blocks small; a Zipf-hot
-   block is handled exactly like a hot LSH band — salt the block key
-   through ``dedup.salted_join_sides``' mechanism, or tighten the key
-   (block on more columns).
+   ``functions/dedup.py`` — literally the same join: blocking is the
+   one-band case of ``dedup.banded_pairs``.  Per-block candidate count
+   is the unit of cost, so block keys are chosen to keep blocks small;
+   a Zipf-hot block is handled exactly like a hot LSH band — salt it
+   (``max_block_size``), or tighten the key (block on more columns).
 2. **Pairwise matching** scores only the candidates: threshold-bounded
    Levenshtein (``F.levenshtein(l, r, threshold)`` — Spark abandons the
    DP early once the distance provably exceeds the bound, so per-pair
@@ -38,7 +38,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from airflow_etl_minio_to_postgres_spark.functions.dedup import (
-    salted_band_sides,
+    banded_pairs,
 )
 from airflow_etl_minio_to_postgres_spark.functions.graph import (
     assign_clusters,
@@ -78,11 +78,13 @@ def blocked_fuzzy_pairs(
     has a Zipf-heavy key (one dominant city/zip) whose ``m`` rows land
     in ONE join task doing ``m**2`` comparisons while the rest of the
     cluster idles (the same straggler the streaming near-dup sink
-    measured at 275 s).  Set, blocks larger than the cap split through
+    measured at 275 s).  Candidates come from
     :func:`~airflow_etl_minio_to_postgres_spark.functions.dedup.
-    salted_band_sides` — the shared skew mechanism of the banded dedup
-    family: the probe side salts into ``ceil(m/cap)`` sub-groups by id
-    hash, the build side replicates into each, every pair still meets
+    banded_pairs` (its one-band case, a block key in place of a band
+    key), so when set, blocks larger than the cap split through
+    ``salted_band_sides`` — the shared skew mechanism of the banded
+    dedup family: the probe side salts into ``ceil(m/cap)`` sub-groups
+    by id hash, the build side replicates into each, every pair still meets
     exactly once, so results are BIT-IDENTICAL to the unsalted plan
     (pytest-pinned) and per-task work drops to ``~cap * m``.  Blocking
     runs over a single hashed block key (``xxhash64`` of the block
@@ -111,41 +113,32 @@ def blocked_fuzzy_pairs(
         F.col(id_col).alias("_id"),
         F.col(name_col).alias("_name"),
         *[F.col(c).alias(a) for c, a in zip(block_cols, blk)],
-        F.xxhash64(*block_cols).alias("_bk"),
+        F.xxhash64(*block_cols).alias("band_key"),
     )
     # Drop null-block rows BEFORE the fan: they can never pair (the
     # documented SQL-equality semantics above), but xxhash64 leaves the
     # running hash UNCHANGED for null inputs, so e.g. (x, NULL) and
-    # (NULL, x) share a _bk bucket and would m**2-pair in the join only
-    # to be filtered by the real-column re-check — a phantom hot block
-    # on null-heavy keys (r15 advisor finding).  Results are identical;
-    # only the wasted comparisons go.
+    # (NULL, x) share a band_key bucket and would m**2-pair in the join
+    # only to be filtered by the real-column re-check — a phantom hot
+    # block on null-heavy keys (r15 advisor finding).  Results are
+    # identical; only the wasted comparisons go.
     for a in blk:
         fan = fan.where(F.col(a).isNotNull())
-    a_fan, b_fan, keys = salted_band_sides(
-        fan, "_id", key="_bk", max_bucket_size=max_block_size
+    pairs = banded_pairs(
+        fan,
+        "_id",
+        ["_name", *blk],
+        band_differs=None,
+        n_bands=1,
+        max_bucket_size=max_block_size,
     )
-    a = a_fan.select(
-        F.col("_id").alias("id_a"),
-        F.col("_name").alias("_name_a"),
-        *[F.col(c).alias(f"{c}_a") for c in blk],
-        *keys,
-    )
-    b = b_fan.select(
-        F.col("_id").alias("id_b"),
-        F.col("_name").alias("_name_b"),
-        *[F.col(c).alias(f"{c}_b") for c in blk],
-        *keys,
-    )
-    pairs = a.join(b, keys)
     # re-check the REAL block equalities: exact on hash collisions, and
     # SQL equality keeps the null-block exclusion the oracle join has
     for c in blk:
         pairs = pairs.where(F.col(f"{c}_a") == F.col(f"{c}_b"))
     return (
-        pairs.where(F.col("id_a") < F.col("id_b"))
         # necessary condition, no DP: edit distance >= length delta
-        .where(F.abs(F.length("_name_a") - F.length("_name_b")) <= d)
+        pairs.where(F.abs(F.length("_name_a") - F.length("_name_b")) <= d)
         .withColumn(
             "distance", F.levenshtein("_name_a", "_name_b", d)
         )

@@ -310,9 +310,10 @@ def ahash_near_dup_pairs(
     chunk; measured ~15M candidate pairs from 10k payloads at sf0.1):
     the bitstring is packed ONCE into two 32-bit longs, so per-candidate
     verification is two xor+bit_counts instead of ``n_cells`` substring
-    compares, and multi-band duplicates are eliminated by a FIRST-
-    MATCHING-BAND predicate (recompute each band's chunk equality from
-    the packed halves — pure integer expressions) rather than a
+    compares.  Candidates come from the shared band self-join
+    (:func:`...functions.dedup.banded_pairs`), whose first-matching-
+    band rule — here each prior band's chunk recomputed from the
+    carried packed halves, pure integer expressions — replaces a
     dropDuplicates shuffle of the full candidate set.  One exchange
     total (the band-key join); the candidate stream never re-shuffles.
 
@@ -322,14 +323,14 @@ def ahash_near_dup_pairs(
     side replicated), so one near-uniform bucket spreads over
     ``ceil(m/cap)`` tasks instead of grinding on one.  EXACT — each
     pair still meets exactly once per shared band, so the first-
-    matching-band predicate and the final result are bit-identical to
-    the unsalted plan; only task-level distribution changes.
+    matching-band rule and the final result are bit-identical to the
+    unsalted plan; only task-level distribution changes.
     """
     if n_cells != 64 or n_bands != 8:
         raise ValueError("packed verification expects 64 bits / 8 bands")
     from airflow_etl_minio_to_postgres_spark.functions.dedup import (
         _persist_tracked,
-        salted_band_sides,
+        banded_pairs,
     )
 
     band_len = n_cells // n_bands
@@ -369,42 +370,24 @@ def ahash_near_dup_pairs(
         ).alias("_band", "band_key"),
     )
 
-    def _chunk(col: str, b: int):
+    def _chunk(side: str, b: int):
         # band b lives in _hi (b<4) or _lo (b>=4), MSB-first
-        src = F.col(col + ("_hi" if b < 4 else "_lo"))
+        src = F.col(("_hi" if b < 4 else "_lo") + side)
         return F.shiftright(src, 24 - 8 * (b % 4)).bitwiseAND(F.lit(255))
 
-    a_fan, b_fan, join_keys = salted_band_sides(
-        packed, id_col, "band_key", max_bucket_size
+    cand = banded_pairs(
+        packed,
+        id_col,
+        ["_hi", "_lo"],
+        lambda b: _chunk("_a", b) != _chunk("_b", b),
+        n_bands,
+        max_bucket_size,
     )
-    a = a_fan.select(
-        F.col(id_col).alias("id_a"),
-        F.col("_hi").alias("a_hi"),
-        F.col("_lo").alias("a_lo"),
-        "_band",
-        *join_keys,
-    )
-    b_side = b_fan.select(
-        F.col(id_col).alias("id_b"),
-        F.col("_hi").alias("b_hi"),
-        F.col("_lo").alias("b_lo"),
-        *join_keys,
-    )
-    cand = a.join(b_side, join_keys).where(F.col("id_a") < F.col("id_b"))
-    first_match = None
-    for b in range(n_bands):
-        eq = _chunk("a", b) == _chunk("b", b)
-        first_match = (
-            F.when(eq, F.lit(b))
-            if first_match is None
-            else first_match.when(eq, F.lit(b))
-        )
     ham = F.bit_count(
-        F.col("a_hi").bitwiseXOR(F.col("b_hi"))
-    ) + F.bit_count(F.col("a_lo").bitwiseXOR(F.col("b_lo")))
+        F.col("_hi_a").bitwiseXOR(F.col("_hi_b"))
+    ) + F.bit_count(F.col("_lo_a").bitwiseXOR(F.col("_lo_b")))
     return (
-        cand.where(F.col("_band") == first_match)
-        .withColumn("hamming", ham.cast("long"))
+        cand.withColumn("hamming", ham.cast("long"))
         .where(F.col("hamming") <= max_hamming)
         .select("id_a", "id_b", "hamming")
     )

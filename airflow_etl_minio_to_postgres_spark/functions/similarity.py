@@ -413,6 +413,23 @@ def _qc_sims_block(qm, cm):
         return num / den
 
 
+def _empty_frame_of(schema):
+    """Zero-row-frame factory for a grouped kernel's declared output
+    ``schema``: column dtypes come from each field's Arrow type (an
+    ``int`` id stays int32), computed once driver-side, so an empty
+    group matches the schema for any id type instead of relying on
+    Arrow's cast of an empty int64 array."""
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    dtypes = {
+        f.name: to_arrow_type(f.dataType).to_pandas_dtype()
+        for f in schema.fields
+    }
+    return lambda: pd.DataFrame(
+        {c: pd.Series([], dtype=t) for c, t in dtypes.items()}
+    )
+
+
 def _cell_topk_kernel(
     k: int,
     id_col: str,
@@ -420,6 +437,7 @@ def _cell_topk_kernel(
     query_id_col: str,
     query_vec_col: str,
     exclude_self: bool,
+    out_schema,
 ):
     """Factory for the per-cell top-k cogroup kernel of
     :func:`ivf_knn_join` (module-level so the pickled closure carries
@@ -434,17 +452,11 @@ def _cell_topk_kernel(
     import numpy as np
 
     kk = int(k)
+    empty = _empty_frame_of(out_schema)
 
     def _topk(qpdf: pd.DataFrame, cpdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame(
-            {
-                query_id_col: pd.Series([], dtype="int64"),
-                id_col: pd.Series([], dtype="int64"),
-                "cosine": pd.Series([], dtype="object"),
-            }
-        )
         if len(qpdf) == 0 or len(cpdf) == 0:
-            return empty
+            return empty()
         c_ids = cpdf[id_col].to_numpy()
         q_ids = qpdf[query_id_col].to_numpy()
         c_arrs = [
@@ -489,7 +501,7 @@ def _cell_topk_kernel(
             sel_i.append(ids_r[order])
             sel_v.append(val_r[order])
         if not sel_q:
-            return empty
+            return empty()
         vals = np.concatenate(sel_v)
         out_c = vals.astype(object)
         with np.errstate(invalid="ignore"):
@@ -593,9 +605,11 @@ def _band_group_sims(pdf, id_col: str, vec_col: str):
     :func:`_pair_sims_block`; NULL / ragged / cross-dimension pairs
     stay NaN — the zip_with null-pad degrade) and ``valid`` is the
     first-matching-band mask (True where NO band before this one also
-    matched — the :func:`_first_match_cond` predicate, evaluated
-    vectorized over the bucket's ``_bks`` arrays).  Diagonal pairs are
-    marked invalid."""
+    matched — the first-match rule of
+    :func:`...functions.dedup.banded_pairs`, evaluated vectorized over
+    the bucket's ``_bks`` arrays).  Self-pairs are marked invalid by id
+    VALUE, so rows sharing a duplicated id never pair with each other
+    (the retired join's ``id_a != id_b``)."""
     import numpy as np
 
     ids = pdf[id_col].to_numpy()
@@ -616,9 +630,9 @@ def _band_group_sims(pdf, id_col: str, vec_col: str):
         sims[np.ix_(idx, idx)] = block
     # first-match validity: every band BEFORE this bucket's band must
     # differ between the two sides (band keys are concat-built strings,
-    # never NULL, so != is exact — same as _first_match_cond)
+    # never NULL, so != is exact)
     band = int(pdf["_band"].iloc[0])
-    valid = ~np.eye(m, dtype=bool)
+    valid = ids[:, None] != ids[None, :]
     bks = list(pdf["_bks"])
     for q in range(band):
         kq = np.array([b[q] for b in bks], dtype=object)
@@ -626,7 +640,9 @@ def _band_group_sims(pdf, id_col: str, vec_col: str):
     return ids, sims, valid
 
 
-def _band_pair_drops_kernel(threshold: float, id_col: str, vec_col: str):
+def _band_pair_drops_kernel(
+    threshold: float, id_col: str, vec_col: str, out_schema
+):
     """Factory for the near-dup grouped kernel: one band bucket in,
     thresholded (id_a < id_b, cosine) pairs out — cosines bit-identical
     to cosine_arrow, NULL-degrade pairs never emitted (NULL is never
@@ -636,17 +652,11 @@ def _band_pair_drops_kernel(threshold: float, id_col: str, vec_col: str):
     import numpy as np
 
     thr = float(threshold)
+    empty = _empty_frame_of(out_schema)
 
     def _drops(pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame(
-            {
-                "id_a": pd.Series([], dtype="int64"),
-                "id_b": pd.Series([], dtype="int64"),
-                "cosine": pd.Series([], dtype="float64"),
-            }
-        )
         if len(pdf) < 2:
-            return empty
+            return empty()
         ids, sims, valid = _band_group_sims(pdf, id_col, vec_col)
         with np.errstate(invalid="ignore"):
             hit = (
@@ -657,7 +667,7 @@ def _band_pair_drops_kernel(threshold: float, id_col: str, vec_col: str):
             )
         ii, jj = np.nonzero(hit)
         if len(ii) == 0:
-            return empty
+            return empty()
         return pd.DataFrame(
             {
                 "id_a": pd.Series(ids[ii]),
@@ -669,7 +679,7 @@ def _band_pair_drops_kernel(threshold: float, id_col: str, vec_col: str):
     return _drops
 
 
-def _band_knn_kernel(k: int, id_col: str, vec_col: str):
+def _band_knn_kernel(k: int, id_col: str, vec_col: str, out_schema):
     """Factory for the k-NN grouped kernel: one band bucket in, each
     member's LOCAL top-k among its first-match candidates in the bucket
     out (both directions — k-NN is asymmetric).  Ordering reproduces
@@ -680,17 +690,11 @@ def _band_knn_kernel(k: int, id_col: str, vec_col: str):
     import numpy as np
 
     kk = int(k)
+    empty = _empty_frame_of(out_schema)
 
     def _knn(pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame(
-            {
-                "_qid": pd.Series([], dtype="int64"),
-                "_nid": pd.Series([], dtype="int64"),
-                "cosine": pd.Series([], dtype="object"),
-            }
-        )
         if len(pdf) < 2:
-            return empty
+            return empty()
         ids, sims, valid = _band_group_sims(pdf, id_col, vec_col)
         sel_q, sel_n, sel_v = [], [], []
         for r in range(len(ids)):
@@ -706,7 +710,7 @@ def _band_knn_kernel(k: int, id_col: str, vec_col: str):
             sel_n.append(ids[take])
             sel_v.append(sims[r, take])
         if not sel_q:
-            return empty
+            return empty()
         vals = np.concatenate(sel_v)
         out_c = vals.astype(object)
         with np.errstate(invalid="ignore"):
@@ -1307,22 +1311,6 @@ def _projection_sql(vec_col: str, weights: list[float]) -> str:
     )
 
 
-def _first_match_cond(n_bands: int) -> Column:
-    """Predicate keeping a banded candidate row only when NO band before
-    the joined one also matched: for every prior band b', either the row
-    came from band <= b' or the two sides' b' keys differ.  Band keys
-    (``_bks_a`` / ``_bks_b`` arrays carried by the join sides) are
-    ``concat``-built strings — never NULL — so plain != is exact."""
-    cond = None
-    for b_prior in range(n_bands - 1):
-        c = (F.col("_band") <= F.lit(b_prior)) | (
-            F.element_at(F.col("_bks_a"), b_prior + 1)
-            != F.element_at(F.col("_bks_b"), b_prior + 1)
-        )
-        cond = c if cond is None else cond & c
-    return cond if cond is not None else F.lit(True)
-
-
 def hyperplane_band_keys_expr(
     vec_col: str, planes: list[list[float]], n_bands: int
 ) -> Column:
@@ -1467,6 +1455,7 @@ def ivf_knn_join(
                 query_id_col,
                 query_vec_col,
                 bool(exclude_self),
+                out_schema,
             ),
             schema=out_schema,
         )
@@ -1808,7 +1797,7 @@ def embedding_near_dup_pairs(
         ]
     )
     return bv.groupBy("band_key").applyInPandas(
-        _band_pair_drops_kernel(threshold, id_col, vec_col),
+        _band_pair_drops_kernel(threshold, id_col, vec_col, out_schema),
         schema=out_schema,
     )
 
@@ -1878,7 +1867,8 @@ def knn_join(
         ]
     )
     scored = bv.groupBy("band_key").applyInPandas(
-        _band_knn_kernel(k, id_col, vec_col), schema=out_schema
+        _band_knn_kernel(k, id_col, vec_col, out_schema),
+        schema=out_schema,
     )
     w = Window.partitionBy("_qid").orderBy(F.col("cosine").desc(), F.col("_nid"))
     return (

@@ -456,25 +456,9 @@ def write_zorder_parquet(
     :func:`zorder_rank_buckets` first (equal-mass quantile buckets, one
     sample aggregate; the bucket helper columns never land in the
     files)."""
-    helper_cols = ["_zval"]
-    if rank_bucket:
-        df, bucket_cols = zorder_rank_buckets(
-            df, zorder_cols, bits=bits, sample_rate=sample_rate
-        )
-        zorder_cols = bucket_cols
-        helper_cols += bucket_cols
-    z = F.expr(zorder_value_sql(zorder_cols, bits))
-    zdf = df.withColumn("_zval", z)
-    if n_files is not None:
-        ranged = zdf.repartitionByRange(n_files, F.col("_zval"))
-    else:
-        ranged = zdf.repartitionByRange(F.col("_zval"))
-    (
-        ranged.sortWithinPartitions("_zval")
-        .drop(*helper_cols)
-        .write.mode(mode)
-        .parquet(path)
-    )
+    _zorder_staged(
+        df, zorder_cols, bits, n_files, rank_bucket, sample_rate
+    ).write.mode(mode).parquet(path)
     return path
 
 
@@ -550,10 +534,10 @@ def _zorder_staged(
     rank_bucket: bool,
     sample_rate: float,
 ) -> DataFrame:
-    """The shared recluster plan (one sampled range exchange on the
+    """The shared Z-order plan (one sampled range exchange on the
     curve value, in-partition sort, helpers dropped) — identical for
-    the local-swap and manifest-committed variants, so they are
-    value-equal by construction."""
+    the one-shot sink and the local-swap and manifest-committed
+    recluster variants, so they are value-equal by construction."""
     helper_cols = ["_zval"]
     zcols = list(zorder_cols)
     if rank_bucket:

@@ -786,50 +786,23 @@ def _intra_batch_drops(
     sets: DataFrame,
     id_col: str,
     threshold: float,
+    num_bands: int,
     max_bucket_size: int | None,
 ) -> DataFrame:
     """Intra-batch pairwise-greedy drop set (the higher id of every
     qualifying pair) — shared verbatim by the streaming sink and the
     batch face :func:`near_dup_against_store`, so the two paths cannot
-    drift."""
+    drift.  ``banded`` is the batch's ``_minhash_band_fan``; candidates
+    come from the dedup family's one band self-join
+    (``functions/dedup.py banded_pairs``), unique by its first-match
+    rule, and pay the same Jaccard verification as ``near_dup_pairs``."""
     from airflow_etl_minio_to_postgres_spark.functions.dedup import (
-        jaccard_expr,
-        salted_band_sides,
+        _minhash_verified_pairs,
     )
 
-    a_fan, b_fan, join_keys = salted_band_sides(
-        banded, id_col, "band_key", max_bucket_size
-    )
-    cand = (
-        a_fan.select(F.col(id_col).alias("id_a"), *join_keys)
-        .join(
-            b_fan.select(F.col(id_col).alias("id_b"), *join_keys),
-            join_keys,
-        )
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    return (
-        cand.join(
-            sets.select(
-                F.col(id_col).alias("id_a"),
-                F.col("shingles").alias("sh_a"),
-            ),
-            "id_a",
-        )
-        .join(
-            sets.select(
-                F.col(id_col).alias("id_b"),
-                F.col("shingles").alias("sh_b"),
-            ),
-            "id_b",
-        )
-        .where(
-            jaccard_expr(F.col("sh_a"), F.col("sh_b")) >= F.lit(threshold)
-        )
-        .select(F.col("id_b").alias(id_col))
-    )
+    return _minhash_verified_pairs(
+        banded, sets, id_col, num_bands, threshold, max_bucket_size
+    ).select(F.col("id_b").alias(id_col))
 
 
 def _store_screen_drops(
@@ -855,6 +828,7 @@ def _store_screen_drops(
         salted_join_sides,
     )
 
+    banded = banded.select(id_col, "band_key")
     bucket_of = F.pmod(
         F.xxhash64(F.col("band_key")), F.lit(int(store_partitions))
     ).cast("int")
@@ -931,9 +905,9 @@ def near_dup_against_store(
     ``functions.dedup.release_caches()`` when done, as after any batch
     dedup operator."""
     from airflow_etl_minio_to_postgres_spark.functions.dedup import (
+        _minhash_band_fan,
         _minhash_table,
         _persist_tracked,
-        band_keys_expr,
     )
 
     spark = df.sparkSession
@@ -947,15 +921,10 @@ def near_dup_against_store(
     sig = _persist_tracked(
         _minhash_table(df, text_col, id_col, num_hashes, shingle_k)
     )
-    banded = sig.select(
-        F.col(id_col),
-        F.explode(
-            band_keys_expr(F.col("minhash"), num_bands, rows_per_band)
-        ).alias("band_key"),
-    )
+    banded = _minhash_band_fan(sig, id_col, num_bands, rows_per_band)
     sets = sig.select(id_col, "shingles")
     dropped = _intra_batch_drops(
-        banded, sets, id_col, threshold, max_bucket_size
+        banded, sets, id_col, threshold, num_bands, max_bucket_size
     ).unionByName(
         _store_screen_drops(
             spark,
@@ -993,18 +962,19 @@ def _near_dup_process_batch(
 
     ``max_bucket_size`` wires the dedup family's shared hot-bucket
     salting (``functions/dedup.py salted_band_sides`` — exact by
-    construction) into the INTRA-batch candidate self-join: low-entropy
+    construction) into the INTRA-batch candidate self-join
+    (``banded_pairs``, the family's one band self-join): low-entropy
     batches (shared boilerplate) concentrate whole bands into hot
     buckets whose m^2 pairwise comparisons land on single tasks
     (measured: a 50k-doc boilerplate-heavy batch spends its wall-clock
     almost entirely there).  None = unsalted, the zero-overhead
     default, same posture as the batch operators.  The batch-vs-STORE
-    join gets the two-frame form (``salted_join_sides``: batch side
-    salted, store side replicated into the sub-groups) under the same
-    knob."""
+    join gets the two-frame form (``salted_join_sides``: each hot
+    bucket salts its larger side and replicates the smaller) under the
+    same knob."""
     from airflow_etl_minio_to_postgres_spark.functions.dedup import (
+        _minhash_band_fan,
         _minhash_table,
-        band_keys_expr,
     )
     from airflow_etl_minio_to_postgres_spark.sources.manifest import (
         resolve_data_root,
@@ -1022,15 +992,10 @@ def _near_dup_process_batch(
     sig = _minhash_table(
         batch_df, text_col, id_col, num_hashes, shingle_k
     ).persist()
-    banded = sig.select(
-        F.col(id_col),
-        F.explode(
-            band_keys_expr(F.col("minhash"), num_bands, rows_per_band)
-        ).alias("band_key"),
-    )
+    banded = _minhash_band_fan(sig, id_col, num_bands, rows_per_band)
     sets = sig.select(id_col, "shingles")
     dropped = _intra_batch_drops(
-        banded, sets, id_col, threshold, max_bucket_size
+        banded, sets, id_col, threshold, num_bands, max_bucket_size
     )
     if _fs_exists(spark, store_path):
         cross = _store_screen_drops(
@@ -1061,7 +1026,8 @@ def _near_dup_process_batch(
         .parquet(out_path)
     )
     (
-        banded.join(dropped_ids, id_col, "left_anti")
+        banded.select(id_col, "band_key")
+        .join(dropped_ids, id_col, "left_anti")
         .join(sets, id_col)
         .withColumn("band_bucket", bucket_of)
         .withColumn("_commit_id", F.lit(commit_id))
@@ -1101,14 +1067,14 @@ def migrate_legacy_near_dup_store(
     the band-partitioned layout :func:`near_dup_store_scan` reads —
     the deliberate rewrite its error message points at.  Band keys are
     recomputed from the stored minhash signatures (the same
-    ``band_keys_expr`` the writer used), so the migrated store is
+    ``_minhash_band_fan`` the writer uses), so the migrated store is
     band-for-band identical to one written natively; migrated rows
     carry commit id ``legacy-0``.  Idempotent: an already-migrated
     store is left untouched.  Returns the number of store rows after
     migration.  Local-FS only (the swap uses ``os.replace``), like
     :func:`migrate_legacy_rollup`."""
     from airflow_etl_minio_to_postgres_spark.functions.dedup import (
-        band_keys_expr,
+        _minhash_band_fan,
     )
     from airflow_etl_minio_to_postgres_spark.sources.files import (
         _local_path,
@@ -1126,13 +1092,8 @@ def migrate_legacy_near_dup_store(
     rows_per_band = num_hashes // num_bands
     id_col = [c for c in df.columns if c not in ("minhash", "shingles")][0]
     migrated = (
-        df.select(
-            F.col(id_col),
-            "shingles",
-            F.explode(
-                band_keys_expr(F.col("minhash"), num_bands, rows_per_band)
-            ).alias("band_key"),
-        )
+        _minhash_band_fan(df, id_col, num_bands, rows_per_band, "shingles")
+        .select(id_col, "shingles", "band_key")
         .withColumn(
             "band_bucket",
             F.pmod(

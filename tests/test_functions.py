@@ -669,16 +669,17 @@ def test_banded_pair_kernel_matches_join_reference(spark):
     """r18: the grouped band-bucket kernels (embedding_near_dup_pairs /
     knn_join) must reproduce the retired band-join + first-match +
     verification-join shape EXACTLY, including dirty rows (NULL vector,
-    wrong dimension, zero norm) and cosine doubles.  Reference built
-    from the same public pieces the old shape used."""
+    wrong dimension, zero norm, a duplicated id) and cosine doubles.
+    Reference candidates come from the family's band self-join
+    (dedup.banded_pairs), kept in both directions for k-NN."""
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
     from airflow_etl_minio_to_postgres_spark.functions.dedup import (
+        banded_pairs,
         release_caches,
     )
     from airflow_etl_minio_to_postgres_spark.functions.similarity import (
-        _first_match_cond,
         cosine_expr,
         embedding_near_dup_pairs,
         hyperplane_band_keys_expr,
@@ -696,7 +697,8 @@ def test_banded_pair_kernel_matches_join_reference(spark):
         (6, [0.0, 0.0, 0.0, 0.0]),        # zero norm
         (7, [1.0, 0.0, 0.0, 0.0]),        # exact dup of 0
         (8, [-1.0, 0.0, 0.0, 0.0]),
-    ]
+        (0, [0.9995, 0.0005, 0.0, 0.0]),  # duplicated id: never its own
+    ]                                     # neighbor (id_a != id_b)
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     dim, n_bands, bits = 4, 3, 4
     got_pairs = embedding_near_dup_pairs(
@@ -704,58 +706,52 @@ def test_banded_pair_kernel_matches_join_reference(spark):
     )
     got_knn = knn_join(df, dim=dim, k=2, n_bands=n_bands, bits_per_band=bits)
 
-    # reference: retired shape from public pieces
+    # reference: the retired join shape — each candidate row carries
+    # both vectors, so a duplicated id pairs by row, never re-joined by id
     planes = hyperplanes(dim, n_bands * bits, 42)
     b = df.select(
         "vec_id",
+        "embedding",
         hyperplane_band_keys_expr("embedding", planes, n_bands).alias(
             "_bks"
         ),
-    ).select("vec_id", "_bks", F.posexplode("_bks").alias("_band", "band_key"))
-    cand = (
-        b.select(
-            F.col("vec_id").alias("id_a"),
-            F.col("_bks").alias("_bks_a"),
-            "_band",
-            "band_key",
-        )
-        .join(
-            b.select(
-                F.col("vec_id").alias("id_b"),
-                F.col("_bks").alias("_bks_b"),
-                "band_key",
-            ),
-            on="band_key",
-        )
-        .where(_first_match_cond(n_bands))
+    ).select(
+        "vec_id",
+        "embedding",
+        "_bks",
+        F.posexplode("_bks").alias("_band", "band_key"),
     )
-    vecs_a = df.select(
-        F.col("vec_id").alias("id_a"), F.col("embedding").alias("v_a")
+    cand = banded_pairs(
+        b,
+        "vec_id",
+        ["_bks", "embedding"],
+        lambda q: F.element_at(F.col("_bks_a"), q + 1)
+        != F.element_at(F.col("_bks_b"), q + 1),
+        n_bands,
     )
-    vecs_b = df.select(
-        F.col("vec_id").alias("id_b"), F.col("embedding").alias("v_b")
-    )
-    ref_pairs = (
-        cand.where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .join(vecs_a, "id_a")
-        .join(vecs_b, "id_b")
-        .withColumn("cosine", cosine_expr(F.col("v_a"), F.col("v_b")))
-        .where(F.col("cosine") >= 0.9)
-        .select("id_a", "id_b", "cosine")
-    )
+    ref_pairs = cand.select(
+        "id_a",
+        "id_b",
+        cosine_expr(F.col("embedding_a"), F.col("embedding_b")).alias(
+            "cosine"
+        ),
+    ).where(F.col("cosine") >= 0.9)
     assert got_pairs.exceptAll(ref_pairs).count() == 0
     assert ref_pairs.exceptAll(got_pairs).count() == 0
 
-    ref_scored = (
-        cand.where(F.col("id_a") != F.col("id_b"))
-        .select(F.col("id_a").alias("_qid"), F.col("id_b").alias("_nid"))
-        .join(vecs_a.withColumnRenamed("id_a", "_qid").withColumnRenamed("v_a", "_qv"), "_qid")
-        .join(vecs_b.withColumnRenamed("id_b", "_nid").withColumnRenamed("v_b", "_nv"), "_nid")
-        .select(
-            "_qid",
-            "_nid",
-            cosine_expr(F.col("_qv"), F.col("_nv")).alias("cosine"),
+    ref_scored = cand.select(
+        F.col("id_a").alias("_qid"),
+        F.col("id_b").alias("_nid"),
+        cosine_expr(F.col("embedding_a"), F.col("embedding_b")).alias(
+            "cosine"
+        ),
+    ).unionByName(
+        cand.select(
+            F.col("id_b").alias("_qid"),
+            F.col("id_a").alias("_nid"),
+            cosine_expr(F.col("embedding_b"), F.col("embedding_a")).alias(
+                "cosine"
+            ),
         )
     )
     w = Window.partitionBy("_qid").orderBy(
@@ -774,6 +770,84 @@ def test_banded_pair_kernel_matches_join_reference(spark):
     assert got_knn.exceptAll(ref_knn).count() == 0
     assert ref_knn.exceptAll(got_knn).count() == 0
     release_caches()
+
+
+def test_band_kernels_keep_int_ids_on_empty_groups(spark):
+    """The grouped kernels' empty-group frames take their id dtypes
+    from the declared output schema: an ``int`` (not ``long``) id
+    column runs through embedding_near_dup_pairs, knn_join and
+    ivf_knn_join on input with singleton band buckets and a cell with
+    queries but no corpus rows (the empty-frame paths), keeps ``int``
+    ids, and returns the rows of the ``long`` run."""
+    from pyspark.sql import functions as F
+    from pyspark.sql import types as T
+
+    from airflow_etl_minio_to_postgres_spark.functions.similarity import (
+        embedding_near_dup_pairs,
+        hyperplane_band_keys_expr,
+        hyperplanes,
+        ivf_knn_join,
+        knn_join,
+    )
+
+    rows = [
+        (1, [1.0, 0.0, 0.0, 0.0]),
+        (2, [0.999, 0.001, 0.0, 0.0]),
+        (3, [-1.0, 0.0, 0.0, 0.0]),
+        (4, [0.0, 0.0, -1.0, -0.5]),
+    ]
+    dim, n_bands, bits = 4, 3, 4
+    sizes = (
+        spark.createDataFrame(rows, "vec_id int, embedding array<double>")
+        .select(
+            F.explode(
+                hyperplane_band_keys_expr(
+                    "embedding", hyperplanes(dim, n_bands * bits, 42), n_bands
+                )
+            ).alias("k")
+        )
+        .groupBy("k")
+        .count()
+        .collect()
+    )
+    assert min(r["count"] for r in sizes) == 1  # a singleton bucket
+    cents = spark.createDataFrame(
+        [
+            (0, [1.0, 0.0, 0.0, 0.0]),
+            (1, [0.0, 0.0, 0.0, 1.0]),  # no corpus row is nearest
+            (2, [-1.0, 0.0, 0.0, 0.0]),
+        ],
+        "cid long, cvec array<double>",
+    )
+
+    def run(id_type: str):
+        df = spark.createDataFrame(
+            rows, f"vec_id {id_type}, embedding array<double>"
+        )
+        qs = spark.createDataFrame(
+            [(10, [0.0, 0.0, 0.0, 1.0]), (11, [1.0, 0.0, 0.0, 0.0])],
+            f"qid {id_type}, qvec array<double>",
+        )
+        return [
+            embedding_near_dup_pairs(
+                df, dim=dim, threshold=0.9, n_bands=n_bands,
+                bits_per_band=bits,
+            ),
+            knn_join(df, dim=dim, k=2, n_bands=n_bands, bits_per_band=bits),
+            ivf_knn_join(qs, df, cents, k=2, nprobe=1),
+        ]
+
+    got, ref = run("int"), run("long")
+    for out in got:
+        for c in ("id_a", "id_b", "vec_id", "neighbor_id", "qid"):
+            if c in out.columns:
+                assert out.schema[c].dataType == T.IntegerType(), c
+    for g, r in zip(got, ref):
+        assert sorted(map(tuple, g.collect())) == sorted(
+            map(tuple, r.collect())
+        )
+    # the query probing the corpus-less cell gets no neighbors
+    assert {r["qid"] for r in got[2].collect()} == {11}
 
 
 def test_quality_lang_pred_cse_parity_and_plan(spark):

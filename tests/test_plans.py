@@ -595,6 +595,38 @@ def test_ahash_hash_is_scan_stage_pairs_join_is_hash_join(spark):
     assert "Python" not in pplan
 
 
+def test_intra_batch_drops_has_no_pair_keyed_aggregate(spark):
+    """The streaming near-dup screen's intra-batch candidates come from
+    the dedup family's one band self-join (banded_pairs): unique by the
+    first-matching-band rule, so no distinct over (id_a, id_b) — the
+    aggregate whose exchange reshuffled every candidate pair when the
+    band join is a shuffle join — salted or not."""
+    import re
+
+    from airflow_etl_minio_to_postgres_spark.functions.dedup import (
+        _minhash_band_fan,
+        _minhash_table,
+        release_caches,
+    )
+    from airflow_etl_minio_to_postgres_spark.streaming.pipeline import (
+        _intra_batch_drops,
+    )
+
+    docs = registry.load_table(spark, "documents", SF_SMOKE)
+    sig = _minhash_table(docs, "text", "doc_id", 8, 3)
+    banded = _minhash_band_fan(sig, "doc_id", 4, 2)
+    sets = sig.select("doc_id", "shingles")
+    for cap in (None, 4):
+        plan = _physical_plan(
+            _intra_batch_drops(banded, sets, "doc_id", 0.5, 4, cap)
+        )
+        assert "BroadcastNestedLoop" not in plan
+        assert not re.search(
+            r"Aggregate\((keys|key)=\[id_a#\d+L?, id_b#\d+L?\]", plan
+        ), (cap, plan)
+    release_caches()
+
+
 def test_ivf_topk_batch_matches_per_query_indexed(spark, tmp_path):
     """Batched-query IVF serving: (1) per-query results are
     bit-identical to ivf_topk_indexed run one query at a time with the

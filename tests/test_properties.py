@@ -521,22 +521,35 @@ def test_image_ahash_matches_python_model(spark, payloads):
 
 
 @given(
-    keys=st.lists(st.integers(0, 3), min_size=1, max_size=40),
+    docs=st.lists(
+        st.tuples(
+            st.integers(0, 3), st.integers(0, 3), st.integers(0, 3)
+        ),
+        min_size=1,
+        max_size=40,
+    ),
     cap=st.integers(1, 6),
+    n_bands=st.integers(1, 3),
+    salted=st.booleans(),
 )
 @SPARK_SETTINGS
-def test_salted_band_sides_every_pair_exactly_once(spark, keys, cap):
+def test_salted_band_sides_every_pair_exactly_once(
+    spark, docs, cap, n_bands, salted
+):
     """salted_band_sides exactness under arbitrary bucket shapes: for
     ANY key multiset and ANY cap, the salted self-join yields every
-    in-bucket (id_a < id_b) pair EXACTLY once — the invariant that
-    makes downstream first-matching-band predicates and dropDuplicates
-    behave identically to the unsalted plan."""
+    in-bucket (id_a < id_b) pair EXACTLY once.  Through banded_pairs
+    on a multi-band fan (one key per doc per band), salted or not,
+    every pair sharing at least one band comes out EXACTLY once — the
+    first-matching-band rule, no distinct exchange."""
     from pyspark.sql import functions as F
 
     from airflow_etl_minio_to_postgres_spark.functions.dedup import (
+        banded_pairs,
         salted_band_sides,
     )
 
+    keys = [d[0] for d in docs]
     rows = [(i, f"k{k}") for i, k in enumerate(keys)]
     fan = spark.createDataFrame(rows, "doc_id long, band_key string")
     a, b, jk = salted_band_sides(fan, "doc_id", "band_key", cap)
@@ -556,6 +569,34 @@ def test_salted_band_sides_every_pair_exactly_once(spark, keys, cap):
             for y in range(x + 1, len(members)):
                 expected.append((members[x], members[y]))
     assert got == sorted(expected)  # exactly once, none lost, none extra
+
+    multi = spark.createDataFrame(
+        [
+            (i, [f"{q}|k{d[q]}" for q in range(n_bands)])
+            for i, d in enumerate(docs)
+        ],
+        "doc_id long, _bks array<string>",
+    ).select(
+        "doc_id", "_bks", F.posexplode("_bks").alias("_band", "band_key")
+    )
+    got = sorted(
+        (r.id_a, r.id_b)
+        for r in banded_pairs(
+            multi,
+            "doc_id",
+            ["_bks"],
+            lambda q: F.element_at("_bks_a", q + 1)
+            != F.element_at("_bks_b", q + 1),
+            n_bands,
+            cap if salted else None,
+        ).collect()
+    )
+    assert got == [
+        (x, y)
+        for x in range(len(docs))
+        for y in range(x + 1, len(docs))
+        if any(docs[x][q] == docs[y][q] for q in range(n_bands))
+    ]
 
 
 @given(
@@ -745,17 +786,14 @@ def test_ivf_assign_nprobe_matches_python_model(spark, vecs, nprobe):
     lkeys=st.lists(st.integers(0, 3), min_size=0, max_size=25),
     rkeys=st.lists(st.integers(0, 3), min_size=0, max_size=25),
     cap=st.integers(1, 6),
-    swap_mode=st.booleans(),
 )
 @SPARK_SETTINGS
-def test_salted_join_sides_every_pair_exactly_once(
-    spark, lkeys, rkeys, cap, swap_mode
-):
+def test_salted_join_sides_every_pair_exactly_once(spark, lkeys, rkeys, cap):
     """salted_join_sides exactness under arbitrary two-frame bucket
-    shapes, in BOTH modes (legacy left-salted and right_id per-bucket
-    swap): for ANY left/right key multisets and ANY cap, the salted
-    join yields every in-bucket (left id, right id) pair EXACTLY once —
-    bit-identical downstream behavior to the unsalted join."""
+    shapes (per-bucket swap: the larger side salts): for ANY left/right
+    key multisets and ANY cap, the salted join yields every in-bucket
+    (left id, right id) pair EXACTLY once — bit-identical downstream
+    behavior to the unsalted join."""
     from pyspark.sql import functions as F
 
     from airflow_etl_minio_to_postgres_spark.functions.dedup import (
@@ -772,12 +810,7 @@ def test_salted_join_sides_every_pair_exactly_once(
     ).where(F.col("rid").isNotNull())
 
     l_fan, r_fan, jk = salted_join_sides(
-        left,
-        right,
-        "lid",
-        "band_key",
-        cap,
-        right_id="rid" if swap_mode else None,
+        left, right, "lid", "band_key", cap, right_id="rid"
     )
     got = sorted(
         (r.lid, r.rid) for r in l_fan.join(r_fan, jk).collect()
@@ -792,10 +825,11 @@ def test_salted_join_sides_every_pair_exactly_once(
 
 
 def test_salted_join_sides_right_heavy_splits(spark):
-    """The right_id mode's reason to exist: a bucket hot ONLY on the
+    """The per-bucket swap's reason to exist: a bucket hot ONLY on the
     right (1 left row x 200 store rows, cap 10) must salt the RIGHT
-    side into ceil(200/10)=20 sub-groups — the legacy mode is pinned
-    at n_salt <= l = 1 (cannot split below r comparisons per task)."""
+    side into ceil(200/10)=20 sub-groups of ~10 and replicate the one
+    left row into each — salting the left side could not split below
+    200 comparisons per task."""
     from pyspark.sql import functions as F
 
     from airflow_etl_minio_to_postgres_spark.functions.dedup import (
@@ -807,17 +841,8 @@ def test_salted_join_sides_right_heavy_splits(spark):
         [(i, "k") for i in range(200)], "rid long, band_key string"
     )
 
-    # legacy: left salts, capped at l=1 -> one sub-group holds all 200
-    l_fan, r_fan, jk = salted_join_sides(
-        left, right, "lid", "band_key", 10
-    )
-    legacy_groups = (
-        r_fan.groupBy(*jk).agg(F.count(F.lit(1)).alias("n")).collect()
-    )
-    assert max(g.n for g in legacy_groups) == 200
-
-    # swap mode: right salts into ceil(200/10)=20 sub-groups of ~10,
-    # left replicates into all 20 — and the pair set is still exact
+    # right salts into ceil(200/10)=20 sub-groups of ~10, left
+    # replicates into all 20 — and the pair set is still exact
     l_fan, r_fan, jk = salted_join_sides(
         left, right, "lid", "band_key", 10, right_id="rid"
     )
@@ -826,6 +851,7 @@ def test_salted_join_sides_right_heavy_splits(spark):
     )
     assert len(swap_groups) == 20
     assert max(g.n for g in swap_groups) <= 20  # ~10 expected, hash spread
+    assert l_fan.count() == 20
     got = sorted((r.lid, r.rid) for r in l_fan.join(r_fan, jk).collect())
     assert got == [(0, i) for i in range(200)]
 
